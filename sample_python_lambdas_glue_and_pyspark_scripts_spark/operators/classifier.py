@@ -23,25 +23,12 @@ counts.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .contraction import BOUNDS, collect_if_under, round6
 from .text import hashed_tf
 from .util import ensure_parallelism
-
-# r14 (guide §8; the kmeans/pq Lloyd-fit precedent): fits whose hashed
-# long-form feature table fits under this row bound run the GD loop
-# driver-side — the feature hashing still happens in Spark (the
-# collect pulls the hashed (id, bucket, tf) rows), gradients/weights
-# round 6dp per iteration via the pinned HALF_UP twin, and σ lives in
-# the same ≤1-ulp exp band the Spark↔DuckDB contract already tolerates
-# under the gradient round. Over-the-bound corpora keep the
-# distributed loop (the limit-probe short-circuits their scan).
-_LOGREG_DRIVER_MAX_FEATURE_ROWS = int(
-    os.environ.get("SPARK_GRAFT_LOGREG_DRIVER_MAX_FEATURE_ROWS", "1000000")
-)
 
 #: bias term lives in a reserved slot below the hash range so every doc
 #: (even one with no tokens) has at least one feature row
@@ -77,29 +64,33 @@ def _logreg_fit_driver(
 ):
     """Driver twin of the logreg_fit GD loop over the collected hashed
     feature rows; returns the ``(bucket, w)`` weight table or None
-    (over the bound / NULL labels → caller runs the distributed loop).
-    Per-iteration arithmetic mirrors the DataFrame form: unrounded
-    margins/residuals, 6dp-rounded mean gradient and weights
-    (``_np_round_half_up_like_spark``); accumulation order is collected
-    row order — the same partial-sum tolerance the distributed form's
-    partition order already lives under."""
+    (over the ``logreg_rows`` bound / NULL labels → caller runs the
+    distributed loop). Feature hashing still happens in Spark; σ lives
+    in the same ≤1-ulp exp band the Spark↔DuckDB contract already
+    tolerates under the gradient round. Per-iteration arithmetic mirrors
+    the DataFrame form: unrounded margins/residuals, 6dp-rounded mean
+    gradient and weights; accumulation order is collected row order —
+    the same partial-sum tolerance the distributed form's partition
+    order already lives under."""
     import numpy as np
 
-    from .similarity import _np_round_half_up_like_spark
-
-    frows = (
-        logreg_features(docs, text_col, id_col, dim)
-        .limit(_LOGREG_DRIVER_MAX_FEATURE_ROWS + 1)
-        .collect()
+    bound = BOUNDS["logreg_rows"]
+    # probe the narrow (id, label) scan side first: every doc emits a
+    # bias feature row, so docs > bound implies features > bound, and an
+    # over-the-bound corpus falls through before any featurization
+    # shuffle. The feature probe below then aggregates ≤ bound docs.
+    lrows = collect_if_under(
+        docs.select(
+            F.col(id_col).alias("__id"),
+            F.col(label_col).cast("double").alias("__y"),
+        ),
+        bound,
     )
-    if len(frows) > _LOGREG_DRIVER_MAX_FEATURE_ROWS:
-        return None
-    lrows = docs.select(
-        F.col(id_col).alias("__id"),
-        F.col(label_col).cast("double").alias("__y"),
-    ).collect()
     if not lrows or any(r["__y"] is None for r in lrows):
-        return None  # empty/NULL-label inputs keep the distributed form
+        return None  # over/empty/NULL-label inputs keep the distributed form
+    frows = collect_if_under(logreg_features(docs, text_col, id_col, dim), bound)
+    if frows is None:
+        return None
     ids = [r["__id"] for r in lrows]
     idx = {x: i for i, x in enumerate(ids)}
     y = np.array([r["__y"] for r in lrows], dtype=np.float64)
@@ -110,10 +101,6 @@ def _logreg_fit_driver(
     bi = np.array([bidx[int(r["bucket"])] for r in frows], dtype=np.int64)
     tf = np.array([float(r["tf"]) for r in frows], dtype=np.float64)
     nb = len(buckets)
-
-    def round6(a):
-        return _np_round_half_up_like_spark(a, 1e6)
-
     w = None
     for _ in range(max(1, n_iter)):
         if w is None:

@@ -30,25 +30,10 @@ min-reachable-id per vertex (__spark_entry__ `dedup_clusters`).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# r14 (guide §8 "decide with small rows"): edge lists below this count
-# are contracted to the driver and solved with exact min-label
-# union-find — replacing 3-10 distributed rounds (each an eager
-# checkpoint job + a convergence-check job) with ZERO Spark jobs after
-# the (already required) edge materialization. Near-dup pair lists are
-# tiny relative to the corpus at every scale (sf0.1: 256 edges; a
-# 100 TB corpus with billions of dup edges takes the distributed loop
-# unchanged). 1M edges ≈ 32 MB of bigints on the driver — the same
-# class as the broadcast relations the engine already collects.
-_CC_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "1000000")
-)
-
-_CC_DRIVER_OK_TYPES = ("bigint", "int", "smallint", "tinyint")
+from .contraction import BOUNDS, INTEGRAL_TYPES, collect_if_under
 
 
 def _cc_driver_labels(edge_rows) -> dict:
@@ -109,22 +94,17 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    # r14 size-adaptive contraction (guide §8): the checkpoint above
-    # already materialized the edge list, so its count is free; tiny
-    # graphs (the common near-dup case at EVERY corpus scale — the pair
-    # list is dup-structure-sized, not corpus-sized) solve exactly on
-    # the driver instead of paying diameter× (checkpoint + count) jobs.
-    # Integral id types only: Python/Spark orderings agree on ints;
-    # strings would need collation care, so they keep the loop.
+    # driver contraction (operators/contraction.py): tiny graphs — the
+    # common near-dup case at EVERY corpus scale, the pair list is
+    # dup-structure-sized, not corpus-sized — solve exactly on the
+    # driver (min-label union-find) instead of paying diameter×
+    # (checkpoint + count) jobs; the probe reads the checkpointed edges.
     dtypes = dict(edges.dtypes)
-    if dtypes["u"] == dtypes["v"] and dtypes["u"] in _CC_DRIVER_OK_TYPES:
-        n_edges = edges.count()
-        if n_edges <= _CC_DRIVER_MAX_EDGES:
-            lab = _cc_driver_labels(
-                [(r["u"], r["v"]) for r in edges.collect()]
-            )
-            spark = pairs.sparkSession
-            return spark.createDataFrame(
+    if dtypes["u"] == dtypes["v"] and dtypes["u"] in INTEGRAL_TYPES:
+        rows = collect_if_under(edges, BOUNDS["cc_edges"])
+        if rows is not None:
+            lab = _cc_driver_labels([(r["u"], r["v"]) for r in rows])
+            return pairs.sparkSession.createDataFrame(
                 list(lab.items()), f"id {dtypes['u']}, cluster_id {dtypes['u']}"
             )
     labels = (
@@ -293,22 +273,15 @@ def connected_components_star(
         ).first()
         return row["n"], row["h"]
 
-    # r14 size-adaptive contraction — same branch as
-    # ``connected_components`` (endpoints are cast to bigint above, so
-    # no dtype guard needed); replaces O(log²) alternating-star rounds
-    # (2 jobs each) with an exact driver-side union-find for edge lists
-    # that are tiny at any corpus scale. The distributed loop below is
-    # unchanged for large graphs.
-    n_edges = edges.count()
-    if n_edges <= _CC_DRIVER_MAX_EDGES:
-        lab = _cc_driver_labels([(r["u"], r["v"]) for r in edges.collect()])
-        spark = pairs.sparkSession
-        members = [(x, c) for x, c in lab.items() if x != c]
-        labels = spark.createDataFrame(
-            members, "u bigint, v bigint"
-        ) if members else spark.createDataFrame([], "u bigint, v bigint")
-        labels = labels.select(
-            F.col("u").alias("id"), F.col("v").alias("cluster_id")
+    # driver contraction — same branch as ``connected_components``
+    # (endpoints are cast to bigint above, so no dtype guard needed);
+    # replaces O(log²) alternating-star rounds (2 jobs each)
+    rows = collect_if_under(edges, BOUNDS["cc_edges"])
+    if rows is not None:
+        lab = _cc_driver_labels([(r["u"], r["v"]) for r in rows])
+        labels = pairs.sparkSession.createDataFrame(
+            [(x, c) for x, c in lab.items() if x != c],
+            "id bigint, cluster_id bigint",
         )
         return (
             verts.join(labels, "id", "left")

@@ -25,33 +25,11 @@ small.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .contraction import BOUNDS, INTEGRAL_TYPES, collect_if_under, round6
 from .util import ensure_parallelism
-
-# r14 (guide §8; the similarity.py Gram precedent): graphs whose edge
-# count fits under this bound run their fixed-round iteration (PPR,
-# LPA) driver-side — Spark still computes the transition probabilities and
-# teleport base (so w/Σw and every pre-iteration 6dp round keep their
-# exact engine arithmetic); only the iteration's multiply-add-round
-# moves to the driver, replacing n_iter unrolled join+aggregate stages
-# and their serial materialization jobs with zero Spark jobs. 1M edges
-# ≈ a few tens of MB collected — the broadcast-relation class. Large
-# graphs take the distributed loop unchanged.
-_GRAPH_DRIVER_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_GRAPH_DRIVER_MAX_EDGES", "1000000")
-)
-
-
-def _round6(x):
-    """Scalar/array Spark-parity HALF_UP 6dp round (the pinned numpy
-    twin from operators.similarity)."""
-    from .similarity import _np_round_half_up_like_spark
-
-    return _np_round_half_up_like_spark(x, 1e6)
 
 
 def pagerank(
@@ -95,7 +73,12 @@ def pagerank(
     )
     trans = None
     try:
-        n = nodes.count()
+        # driver contraction (operators/contraction.py): probe the
+        # persisted edge projection; small graphs collect the node table
+        # (its size is n) instead of counting it
+        small = collect_if_under(e, BOUNDS["graph_edges"]) is not None
+        node_rows = nodes.collect() if small else None
+        n = len(node_rows) if small else nodes.count()
         if n == 0:
             raise ValueError("pagerank: empty edge table")
         # per-source transition probabilities: one groupBy + join back
@@ -108,17 +91,13 @@ def pagerank(
                 F.round(F.col("__w") / F.col("__ow"), 6).alias("__p"),
             )
         )
-        # r14 driver contraction — same branch as personalized_pagerank
-        # (nodes.count() above already materialized the e cache, so the
-        # edge count is one cheap aggregate); uniform base/start are
-        # the same 6dp rounds via the pinned HALF_UP twin of F.round
-        n_edges = e.count()
-        if n_edges <= _GRAPH_DRIVER_MAX_EDGES:
-            r1n = float(_round6(1.0 / n))
-            b0 = float(_round6((1.0 - damping) / n))
+        if small:
+            # same branch as personalized_pagerank; the uniform base and
+            # start are the same 6dp rounds via the HALF_UP twin of F.round
+            r1n = float(round6(1.0 / n))
+            b0 = float(round6((1.0 - damping) / n))
             base_rows = [
-                {"node": r["node"], "__p0": r1n, "__b": b0}
-                for r in nodes.collect()
+                {"node": r["node"], "__p0": r1n, "__b": b0} for r in node_rows
             ]
             return _ppr_driver_iterate(
                 edges.sparkSession,
@@ -177,7 +156,7 @@ def _ppr_driver_iterate(
     rows ``(__u, __v, __p)`` and base rows ``(node, __p0, __b)`` — the
     exact per-iteration formula of the distributed loop:
     ``rank_v ← round6(b_v + d·Σ_u rank_u·p_uv)`` from ``rank = p0``.
-    Rounding is the pinned Spark-parity HALF_UP helper; summation runs
+    Rounding is :func:`contraction.round6`; summation runs
     in collected edge order (the distributed form's own partial-sum
     order is partition-dependent — both live under the contract's 6dp
     tolerance)."""
@@ -193,7 +172,7 @@ def _ppr_driver_iterate(
     for _ in range(n_iter):
         inflow = np.zeros(len(nodes), dtype=np.float64)
         np.add.at(inflow, vi, ranks[ui] * p)
-        ranks = _round6(b + damping * inflow)
+        ranks = round6(b + damping * inflow)
     return spark.createDataFrame(
         [(nodes[i], float(ranks[i])) for i in range(len(nodes))],
         f"node {node_type}, rank double",
@@ -292,9 +271,6 @@ def personalized_pagerank(
     trans = None
     basev = None
     try:
-        # materialize the e cache first (an aggregate-only job — no
-        # data to the driver); its count is the size-adaptive branch
-        n_edges = e.count()
         outw = e.groupBy("__u").agg(F.sum("__w").alias("__ow"))
         trans_expr = (
             e.join(outw, "__u")
@@ -318,8 +294,8 @@ def personalized_pagerank(
                 ).alias("__b"),
             )
         )
-        if n_edges <= _GRAPH_DRIVER_MAX_EDGES:
-            # r14 driver contraction: SPARK computed every
+        if collect_if_under(e, BOUNDS["graph_edges"]) is not None:
+            # driver contraction: SPARK computed every
             # pre-iteration quantity above (w/Σw transition probs, the
             # 6dp-rounded seed distribution and teleport base), so the
             # only arithmetic that moves engines is the iteration's
@@ -558,21 +534,17 @@ def label_propagation(
         e.select(F.col("v").alias("node"))
     ).distinct().persist()
     try:
-        # r14 driver contraction (guide §8; the CC/PPR pattern): LPA is
-        # INTEGER-exact (vote counts, smallest-label tie-break), so the
-        # driver twin is arithmetic-identical, not merely
-        # tolerance-equal. The canonical edge list is already
-        # materialized by the count; small graphs skip n_iter unrolled
-        # join+aggregate rounds entirely.
+        # driver contraction: LPA is INTEGER-exact (vote counts,
+        # smallest-label tie-break), so the driver twin is
+        # arithmetic-identical, not merely tolerance-equal. Small graphs
+        # skip n_iter unrolled join+aggregate rounds entirely.
         dtypes = dict(e.dtypes)
-        if dtypes["u"] == dtypes["v"] and dtypes["u"] in (
-            "bigint", "int", "smallint", "tinyint"
-        ):
-            n_edges = e.count()
-            if n_edges <= _GRAPH_DRIVER_MAX_EDGES:
+        if dtypes["u"] == dtypes["v"] and dtypes["u"] in INTEGRAL_TYPES:
+            rows = collect_if_under(e, BOUNDS["graph_edges"])
+            if rows is not None:
                 return _lpa_driver_iterate(
                     edges.sparkSession,
-                    [(r["u"], r["v"]) for r in e.collect()],
+                    [(r["u"], r["v"]) for r in rows],
                     n_iter,
                     dtypes["u"],
                 )

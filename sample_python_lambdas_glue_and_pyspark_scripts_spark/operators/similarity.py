@@ -17,26 +17,17 @@ bit-comparable with a DuckDB oracle using
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import ensure_parallelism, guard_quadratic
-
-# r14 (guide §8; the CC/PPR/Gram precedent applied to the Lloyd fits):
-# corpora under this row bound run kmeans_fit / pq_fit driver-side —
-# the fits make their discrete decisions (argmin, tie-break) on
-# 6dp-ROUNDED distances and emit 6dp-rounded means, so the driver twin
-# reproduces the same values under the contract's existing sum-order
-# tolerance (the per-dim fold is replicated in the exact left-to-right
-# order of the Spark aggregate). Inputs with NULL/ragged vectors or
-# non-integral ids fall through to the distributed loops unchanged, as
-# does anything over the bound (100k×64 doubles ≈ 51 MB collected —
-# the broadcast-relation class).
-_KMEANS_DRIVER_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_MAX_ROWS", "100000")
+from .contraction import (
+    BOUNDS,
+    INTEGRAL_TYPES,
+    collect_if_under,
+    round6,
+    round_half_up,
 )
+from .util import ensure_parallelism, guard_quadratic
 
 
 def _dbl(col: Column | str) -> Column:
@@ -138,35 +129,6 @@ def cosine_topk(
     )
 
 
-def _np_round_half_up_like_spark(x, scale: float):
-    """numpy twin of Spark ``ROUND(double, n)`` (n = log10(scale)).
-
-    Spark rounds via BigDecimal.valueOf(x).setScale(n, HALF_UP): it
-    rounds the SHORTEST DECIMAL REPR of the double, not the binary
-    value. The fast floor(|x|*scale + .5) path matches it everywhere
-    except the 2.675-style boundary band (shortest repr ends in ...5
-    while the binary value sits just below); only that band routes
-    through Python's repr -> Decimal, which reproduces
-    BigDecimal.valueOf exactly. Parity is pinned by
-    tests/test_similarity_multimodal.py::test_np_round_matches_spark.
-    """
-    import numpy as np
-
-    scaled = np.abs(x) * scale
-    out = np.sign(x) * np.floor(scaled + 0.5) / scale
-    frac = scaled - np.floor(scaled)
-    band = np.abs(frac - 0.5) < 1e-6
-    if band.any():
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal(1) / Decimal(int(scale))
-        out[band] = [
-            float(Decimal(repr(float(v))).quantize(q, rounding=ROUND_HALF_UP))
-            for v in np.asarray(x[band]).ravel()
-        ]
-    return out
-
-
 def cosine_topk_vectorized(
     corpus: DataFrame,
     queries: DataFrame,
@@ -191,7 +153,7 @@ def cosine_topk_vectorized(
     pair relation never materializes as Spark rows and never shuffles.
 
     Parity details pinned by tests: Spark shortest-decimal-repr HALF_UP
-    rounding (see ``_np_round_half_up_like_spark``); zero-norm and
+    rounding (see ``contraction.round_half_up``); zero-norm and
     NaN-poisoned vectors score NULL (never NaN) on both sides; a batch
     short of k non-null candidates pads with its lowest-id NULL-sim rows
     so the global NULLS-LAST fill matches the join formulation's.
@@ -214,21 +176,15 @@ def cosine_topk_vectorized(
     import numpy as np
     import pandas as pd
 
-    _INTEGRAL = ("byte", "tinyint", "short", "smallint", "int", "integer",
-                 "bigint", "long")
     for side, d in (("corpus", corpus), ("queries", queries)):
         t = dict(d.dtypes).get(id_col)
-        if t not in _INTEGRAL:
+        if t not in INTEGRAL_TYPES:
             raise ValueError(
                 f"cosine_topk_vectorized requires an integral {id_col} "
                 f"({side} has {t}); use cosine_topk for other id types"
             )
     out_schema = "query_id bigint, neighbor_id bigint, sim double"
-    scale = float(10**round_to)
     corpus_proj = ensure_parallelism(corpus).select(id_col, vec_col)
-
-    def _round_half_up(x):
-        return _np_round_half_up_like_spark(x, scale)
 
     def _score_block(q_rows):
         qids = np.array([r[0] for r in q_rows], dtype=np.int64)
@@ -254,7 +210,7 @@ def cosine_topk_vectorized(
                 valid = np.isfinite(cn) & (cn != 0.0)
                 iv = ids[valid]
                 inv = np.sort(ids[~valid])
-                S = _round_half_up((C[valid] / cn[valid, None]) @ Qt)
+                S = round_half_up((C[valid] / cn[valid, None]) @ Qt, round_to)
                 # self-matches become -inf in ONE vectorized scatter — a
                 # per-query boolean mask would copy the column 1024 times
                 S[iv[:, None] == qids[None, :]] = -np.inf
@@ -761,25 +717,20 @@ def assign_nearest_centroid(
     )
 
 
-def _collect_vectors_bounded(
-    df: DataFrame, id_col: str, vec_col: str, max_rows: int
-):
-    """Driver-contraction probe: collect ``(id, double-vector)`` rows
-    iff the input fits under ``max_rows`` (limit max_rows+1 — Spark
-    short-circuits the scan, so an over-the-bound corpus pays a few
-    partitions, not a full pass), ids are integral, and every vector is
-    non-NULL, uniform-width, with no NULL elements. Returns
-    ``(ids, vecs, d, id_type)`` or None (caller falls through to the
-    distributed form)."""
+def _collect_vectors_bounded(df: DataFrame, id_col: str, vec_col: str):
+    """Lloyd-fit driver-contraction probe: ``(id, double-vector)`` rows
+    iff the input fits under the ``lloyd_rows`` bound, ids are integral,
+    and every vector is non-NULL, uniform-width, with no NULL elements.
+    Returns ``(ids, vecs, d, id_type)`` or None (caller falls through to
+    the distributed form)."""
     t = dict(df.dtypes).get(id_col)
-    if t not in ("tinyint", "smallint", "int", "bigint"):
+    if t not in INTEGRAL_TYPES:
         return None
-    rows = (
-        df.select(F.col(id_col).alias("__id"), _dbl(vec_col).alias("__v"))
-        .limit(max_rows + 1)
-        .collect()
+    rows = collect_if_under(
+        df.select(F.col(id_col).alias("__id"), _dbl(vec_col).alias("__v")),
+        BOUNDS["lloyd_rows"],
     )
-    if len(rows) > max_rows:
+    if rows is None:
         return None
     ids, vecs, d = [], [], None
     for r in rows:
@@ -813,9 +764,6 @@ def _lloyd_driver(ids, vecs, k: int, n_iter: int, early_stop: bool):
     X = np.array(vecs, dtype=np.float64)[order]
     n, d = X.shape
     k = min(k, n)
-
-    def round6(a):
-        return _np_round_half_up_like_spark(a, 1e6)
 
     # seeds: first k rows by id; label_centroids over one row = round6(x)
     labels_now = list(range(k))
@@ -893,9 +841,7 @@ def kmeans_fit(
     the whole history (see operators/clustering.py for the same
     pattern).
     """
-    got = _collect_vectors_bounded(
-        vectors, id_col, vec_col, _KMEANS_DRIVER_MAX_ROWS
-    )
+    got = _collect_vectors_bounded(vectors, id_col, vec_col)
     if got is not None:
         ids, vecs, _d, id_t = got
         assign_rows, cent_rows = _lloyd_driver(
@@ -958,10 +904,8 @@ def _semantic_dropped_vectorized(
     import numpy as np
     import pandas as pd
 
-    integral = ("byte", "tinyint", "short", "smallint", "int", "integer",
-                "bigint", "long")
     t = dict(labeled.dtypes).get(id_col)
-    if t not in integral:
+    if t not in INTEGRAL_TYPES:
         raise TypeError(
             f"vectorized semantic_dedup needs an integral {id_col} "
             f"(got {t}); use engine='join' for arbitrary id types"
@@ -981,7 +925,7 @@ def _semantic_dropped_vectorized(
             sims = mat[s:e] @ mat.T
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = sims / (norms[s:e, None] * norms[None, :])
-            sims = _np_round_half_up_like_spark(sims, 1e6)
+            sims = round6(sims)
             lower = np.arange(n)[None, :] < np.arange(s, e)[:, None]
             # NaN (zero-norm / poisoned) compares False — never drops,
             # matching the join path's NULL similarity
@@ -1016,10 +960,8 @@ def _semantic_maxsim_vectorized(
     import numpy as np
     import pandas as pd
 
-    integral = ("byte", "tinyint", "short", "smallint", "int", "integer",
-                "bigint", "long")
     t = dict(labeled.dtypes).get(id_col)
-    if t not in integral:
+    if t not in INTEGRAL_TYPES:
         raise TypeError(
             f"vectorized semantic_dedup_sweep needs an integral {id_col} "
             f"(got {t}); use engine='join' for arbitrary id types"
@@ -1040,7 +982,7 @@ def _semantic_maxsim_vectorized(
             sims = mat[s:e] @ mat.T
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = sims / (norms[s:e, None] * norms[None, :])
-            sims = _np_round_half_up_like_spark(sims, 1e6)
+            sims = round6(sims)
             lower = np.arange(n)[None, :] < np.arange(s, e)[:, None]
             with np.errstate(invalid="ignore"):
                 ok = (sims >= thr) & lower  # NaN compares False
@@ -1111,7 +1053,7 @@ def semantic_dedup(
     ``applyInPandas`` and scores all pairs with row-chunked BLAS matmuls
     (Σ|c|² multiply-adds happen inside BLAS instead of as Σ|c|²
     higher-order-function Spark rows — 5-8× at sf0.1, identical output:
-    the 6dp HALF_UP round uses ``_np_round_half_up_like_spark`` and
+    the 6dp HALF_UP round uses ``contraction.round6`` and
     NaN/zero-norm pairs never drop, matching the join path's NULL
     semantics; requires integral ids like ``cosine_topk_vectorized``).
     ``"join"`` is the pure-DataFrame formulation the oracle SQL mirrors
@@ -1301,21 +1243,14 @@ def _gram_power_iterate(G, d: int, n_iter: int) -> list[float]:
     one ulp between numpy and the unrolled SQL. The pin is the
     correctness-gate re-run of the pca_* queries on every testdata
     regeneration (CLAUDE.md rule), not the arithmetic alone. Rounding
-    is ``_np_round_half_up_like_spark`` (parity test-pinned)."""
+    is ``contraction.round6`` (parity test-pinned)."""
     import numpy as np
 
-    v = np.full(
-        d,
-        float(
-            _np_round_half_up_like_spark(
-                np.array([1.0 / d**0.5]), 1e6
-            )[0]
-        ),
-    )
+    v = np.full(d, float(round6(1.0 / d**0.5)))
     for _ in range(n_iter):
         w = G @ v
         nrm = float(np.sqrt(np.sum(w * w)))
-        v = _np_round_half_up_like_spark(w / nrm, 1e6)
+        v = round6(w / nrm)
     return [float(x) for x in v]
 
 
@@ -1985,9 +1920,7 @@ def pq_fit(
     # label)); round6(avg) M-step), so each subspace runs the same
     # kernel on its dim slice. Over-the-bound / NULL / ragged corpora
     # fall through to the distributed loop unchanged.
-    got = _collect_vectors_bounded(
-        corpus, id_col, vec_col, _KMEANS_DRIVER_MAX_ROWS
-    )
+    got = _collect_vectors_bounded(corpus, id_col, vec_col)
     if got is not None:
         ids, vecs, _d, _t = got
         rows_out = []

@@ -101,6 +101,18 @@ def test_range_rule_nulls_pass(spark):
     ) == {"018", "019"}
 
 
+def test_positive_rule_nulls_pass(spark):
+    # F11 PA price rule: numeric <= 0 invalid; NULL and non-numeric pass
+    # (pandas dropna lets them through, pa_etl_script.py:202-209)
+    df = spark.createDataFrame(
+        [("018", "0"), ("019", "-1.5"), ("020", "2.0"), ("021", None), ("022", "x")],
+        "opco_id string, price string",
+    )
+    rule = V.Rule("price_positive", "price", "positive")
+    bad = df.filter(rule.invalid_condition()).select("opco_id").collect()
+    assert {r["opco_id"] for r in bad} == {"018", "019"}
+
+
 DATE_REGEX_CASES = [
     # (value, valid) — reference: test_date_format_regex.py:20-265
     ("2020-08-06 00:00:00", True),

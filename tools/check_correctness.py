@@ -7,10 +7,18 @@ oracle_sql() via DuckDB: row count, column-name set, and an
 order-insensitive value comparison (columns sorted by name, rows
 sorted, values normalized). Prints the resolved data dir up front and
 one line per query + a summary.
+
+    python tools/check_correctness.py [query ...] [--contraction off]
+
+``--contraction off`` runs every driver-contraction family's distributed
+loop (``operators/contraction.py`` ``forced_off``) — the oracle arm for
+the path those operators take above their bounds.
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
 import math
 import os
 import sys
@@ -21,6 +29,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
+from sample_python_lambdas_glue_and_pyspark_scripts_spark.operators.contraction import (
+    forced_off,
+)
 from sample_python_lambdas_glue_and_pyspark_scripts_spark.session import get_spark
 
 from sample_python_lambdas_glue_and_pyspark_scripts_spark.sources.readers import (
@@ -170,8 +181,23 @@ def dtype_lint(spark_schema, duck_cols, duck_types):
     return msgs
 
 
-def main():
-    only = set(sys.argv[1:])
+def main(argv=None):
+    ap = argparse.ArgumentParser(description="Contract queries vs the DuckDB oracle.")
+    ap.add_argument("queries", nargs="*", help="query names (default: every query)")
+    ap.add_argument(
+        "--contraction",
+        choices=("auto", "off"),
+        default="auto",
+        help="off: every driver-contraction family runs its distributed loop",
+    )
+    args = ap.parse_args(argv)
+    print(f"driver contraction: {args.contraction}")
+    arm = forced_off() if args.contraction == "off" else contextlib.nullcontext()
+    with arm:
+        return check(set(args.queries))
+
+
+def check(only):
     spark = get_spark(app_name="correctness-check")
     con = duckdb.connect()
     for t in TABLES:
