@@ -29,6 +29,8 @@ from enum import Enum
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.promote import hadoop_fs, read_state
+
 
 class ValidationPolicy(int, Enum):
     """O4: the reference's 0/1/2 knob (load_job.py:285-301)."""
@@ -150,18 +152,15 @@ class VersionedCatalog:
         self.init_opco(opco)
 
     def _read_catalog(self) -> DataFrame | None:
-        # recover a crashed swap BEFORE reading: otherwise a run that
-        # died between the two renames reads "no catalog" and the next
-        # write rebuilds it without every other opco's rows
-        from ..sources.promote import recover_backup
-
-        recover_backup(
-            self.spark, self.catalog_path, error_cls=ETLLoadError
-        )
+        # recover a crashed swap BEFORE reading, and never read a broken
+        # catalog as absent: either way the next write would rebuild it
+        # without every other opco's ACTIVE/FUTURE rows
         try:
-            return self.spark.read.parquet(self.catalog_path)
-        except Exception:
-            return None
+            return read_state(self.spark, self.catalog_path)
+        except Exception as e:
+            raise ETLLoadError(
+                f"catalog at {self.catalog_path} is unreadable: {e}"
+            ) from e
 
     def _write_catalog(self, df: DataFrame) -> None:
         # write-then-rename swap via the shared checked-rename helper
@@ -193,11 +192,8 @@ class VersionedCatalog:
 
     def table_is_empty(self, table_name: str) -> bool:
         """check_table_is_empty (load_job.py:193): LIMIT-1 probe."""
-        try:
-            df = self.spark.read.parquet(self.table_path(table_name))
-        except Exception:
-            return True
-        return len(df.limit(1).collect()) == 0
+        df = read_state(self.spark, self.table_path(table_name))
+        return df is None or len(df.limit(1).collect()) == 0
 
     # --- load ------------------------------------------------------------
     def load_opco(
@@ -272,9 +268,5 @@ class VersionedCatalog:
         self._write_catalog(swapped)
         # truncate the demoted table (now FUTURE) for the next cycle
         path = self.table_path(old_active)
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI.create(path), hconf
-        )
-        fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
+        fs, hpath = hadoop_fs(self.spark, path)
+        fs.delete(hpath(path), True)

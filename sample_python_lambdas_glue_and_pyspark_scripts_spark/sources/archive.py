@@ -15,6 +15,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from .promote import hadoop_fs
+
 
 class ArchiveVerificationError(RuntimeError):
     """Copy verification failed — sources are NOT deleted (reference
@@ -28,17 +30,10 @@ class ArchiveResult:
     archive_path: str
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    uri = jvm.java.net.URI.create(path)
-    return jvm.org.apache.hadoop.fs.FileSystem.get(uri, hconf), jvm
-
-
 def list_files(spark: SparkSession, path: str) -> list[str]:
     """S9: recursive file listing (reference: paginated list_objects_v2)."""
-    fs, jvm = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs, Path = hadoop_fs(spark, path)
+    p = Path(path)
     if not fs.exists(p):
         return []
     out = []
@@ -60,9 +55,8 @@ def archive_and_cleanup(
     target count == source count (the reference's head_object + count
     validation). Any mismatch raises and leaves sources intact.
     """
-    fs, jvm = _fs(spark, source_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    FileUtil = jvm.org.apache.hadoop.fs.FileUtil
+    fs, Path = hadoop_fs(spark, source_path)
+    FileUtil = spark._jvm.org.apache.hadoop.fs.FileUtil
     conf = spark._jsc.hadoopConfiguration()
 
     sources = list_files(spark, source_path)

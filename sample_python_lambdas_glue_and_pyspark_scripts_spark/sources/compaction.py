@@ -23,15 +23,16 @@ def compact_partitioned(
     """Rewrite ``path`` with ~target-sized files per partition.
 
     Files-per-partition is derived from current on-disk bytes; the
-    rewrite goes through a temp dir then swaps, so readers never see a
-    half-compacted dataset. Returns {files_before, files_after}.
+    rewrite goes through the checked-rename promote (``promote_swap``),
+    so readers never see a half-compacted dataset, and a crash between
+    its renames is recovered before the next call reads the dataset.
+    Returns {files_before, files_after}.
     """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-        jvm.java.net.URI.create(path), hconf
-    )
-    Path = jvm.org.apache.hadoop.fs.Path
+    from .promote import hadoop_fs, promote_swap, recover_backup
+
+    path = path.rstrip("/")
+    recover_backup(spark, path)
+    fs, Path = hadoop_fs(spark, path)
 
     def stats(p: str) -> tuple[int, int]:
         it = fs.listFiles(Path(p), True)
@@ -51,31 +52,23 @@ def compact_partitioned(
     )
     files_per_partition = max(1, round(total_bytes / n_partitions / target_file_bytes))
 
-    tmp = path.rstrip("/") + "__compact"
     # repartition on (partition key, salt): hashing on the key alone puts
     # each partition value in ONE task, so a hot partition could never be
     # split into multiple target-sized files
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(files_per_partition))
-    (
-        df.withColumn("__salt", salt)
-        .repartition(n_partitions * files_per_partition, F.col(partition_by), F.col("__salt"))
-        .drop("__salt")
-        .write.partitionBy(partition_by)
-        .mode("overwrite")
-        .format(fmt)
-        .save(tmp)
+    promote_swap(
+        spark,
+        path,
+        lambda tmp: (
+            df.withColumn("__salt", salt)
+            .repartition(n_partitions * files_per_partition, F.col(partition_by), F.col("__salt"))
+            .drop("__salt")
+            .write.partitionBy(partition_by)
+            .mode("overwrite")
+            .format(fmt)
+            .save(tmp)
+        ),
+        error_cls=RuntimeError,
     )
-    old = path.rstrip("/") + "__old"
-    # rename returns False on failure (it rarely throws): pre-clean any
-    # stale backup from a crashed run, check each step, and restore the
-    # original on a failed promote — never delete data we can't replace.
-    fs.delete(Path(old), True)
-    if not fs.rename(Path(path), Path(old)):
-        fs.delete(Path(tmp), True)
-        raise RuntimeError(f"compaction swap failed: cannot move {path} aside")
-    if not fs.rename(Path(tmp), Path(path)):
-        fs.rename(Path(old), Path(path))  # restore original dataset
-        raise RuntimeError(f"compaction swap failed: cannot promote {tmp}")
-    fs.delete(Path(old), True)
     files_after, _ = stats(path)
     return {"files_before": files_before, "files_after": files_after}

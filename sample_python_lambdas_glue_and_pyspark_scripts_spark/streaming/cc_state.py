@@ -40,15 +40,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.clustering import extend_components
+from ..sources.promote import list_epochs
 
 _CC_EDGES_SCHEMA = "a bigint, b bigint"
 _CC_LABELS_SCHEMA = "id bigint, cluster_id bigint"
-
-
-def _committed_epochs(spark: SparkSession, table_dir: str) -> list[int]:
-    from .state_retraction import list_state_epochs
-
-    return list_state_epochs(spark, table_dir)
 
 
 def _labels_at(spark: SparkSession, work_dir: str, epoch: int) -> DataFrame:
@@ -84,7 +79,7 @@ def make_cc_batch_fn(work_dir: str, src: str = "a", dst: str = "b"):
         )
         prior = [
             e
-            for e in _committed_epochs(spark, f"{work_dir}/cc_labels")
+            for e in list_epochs(spark, f"{work_dir}/cc_labels")
             if e < batch_id
         ]
         prev = (
@@ -108,7 +103,7 @@ def read_cc_state(spark: SparkSession, work_dir: str) -> DataFrame:
     extend ≡ rebuild law, to ``connected_components`` over every edge
     the stream has seen (batch↔stream parity, pinned by test).
     Empty-but-valid before the first commit."""
-    epochs = _committed_epochs(spark, f"{work_dir}/cc_labels")
+    epochs = list_epochs(spark, f"{work_dir}/cc_labels")
     if not epochs:
         return _empty_labels(spark)
     return _labels_at(spark, work_dir, max(epochs))

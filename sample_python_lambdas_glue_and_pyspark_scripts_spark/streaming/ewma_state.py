@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.timeseries import ewma_fold, ewma_scaled_value
+from ..sources.promote import drop_epochs, list_epochs, read_state, replace_epoch
 from .incremental import run_incremental
 
 
@@ -56,15 +57,10 @@ def _read_latest_state(
     (the batch's distinct keys) filters the state rows BEFORE the
     latest-wins aggregate, so the per-batch cost is sized by the
     touched keys' history, never the whole key universe."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/ewma")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    raw = read_state(spark, f"{work_dir}/ewma")
+    if raw is None:
         return None
-    raw = (
-        spark.read.parquet(f"{work_dir}/ewma")
-        .filter(F.col("batch_id").cast("bigint") < before_batch)
-    )
+    raw = raw.filter(F.col("batch_id").cast("bigint") < before_batch)
     if only_keys is not None:
         raw = raw.join(only_keys.select(key_col), key_col, "left_semi")
     return raw.groupBy(key_col).agg(
@@ -220,64 +216,25 @@ def compact_ewma_state(
     batch + 1 (a replayed batch overwrites its own dir; compacting an
     unsealed epoch would let the replay wipe merged history).
 
-    Latest-wins is preserved exactly: the merged partition carries each
-    key's max-epoch row, and any LATER epoch still out-ranks it in the
-    read's max_by. Uses the checked-rename promote with dot-prefixed
-    names (orphan recovery at entry via ``recover_backup``). Returns
+    Latest-wins is preserved exactly: the merged partition is the
+    read's own latest-per-key fold over those epochs, and any LATER
+    epoch still out-ranks it in the read's max_by. Replaced through
+    ``promote.replace_epoch`` (orphaned backups of any earlier run are
+    restored by ``list_epochs`` first). Returns
     ``(rows_before, rows_after)``."""
-    from ..sources.promote import hadoop_fs, promote_swap, recover_backup
-
     state_dir = f"{work_dir}/ewma"
-    fs, hpath = hadoop_fs(spark, state_dir)
-    if not fs.exists(hpath(state_dir)):
-        return 0, 0
-    target_epoch = upto_batch - 1
-    target = f"{state_dir}/batch_id={target_epoch}"
-    recover_backup(
-        spark, target, f"{state_dir}/.compact_bak_{target_epoch}"
-    )
-    epochs = []
-    for st in fs.listStatus(hpath(state_dir)):
-        name = st.getPath().getName()
-        if name.startswith("batch_id="):
-            try:
-                e = int(name[len("batch_id="):])
-            except ValueError:
-                continue
-            if e < upto_batch:
-                epochs.append(e)
+    epochs = [e for e in list_epochs(spark, state_dir) if e < upto_batch]
     if not epochs:
         return 0, 0
-    # batch_id is a partition column only when read through the parent
-    # dir; explicit per-dir reads drop it, so re-attach epoch via a
-    # union with literals to keep max_by exact
-    parts = None
-    for e in sorted(epochs):
-        p = spark.read.parquet(f"{state_dir}/batch_id={e}").withColumn(
-            "_e", F.lit(e)
-        )
-        parts = p if parts is None else parts.unionByName(p)
-    rows_before = parts.count()
-    merged = (
-        parts.groupBy(key_col)
-        .agg(F.max_by(F.struct("s", "n_points"), F.col("_e")).alias("_st"))
-        .select(key_col, F.col("_st.s").alias("s"),
-                F.col("_st.n_points").alias("n_points"))
-        .localCheckpoint(eager=True)
+    rows_before = (
+        read_state(spark, state_dir)
+        .filter(F.col("batch_id").cast("bigint") < upto_batch)
+        .count()
     )
+    merged = _read_latest_state(
+        spark, work_dir, upto_batch, key_col
+    ).localCheckpoint(eager=True)
     rows_after = merged.count()
-
-    def _write(tmp_path: str) -> None:
-        merged.write.mode("overwrite").parquet(tmp_path)
-
-    promote_swap(
-        spark,
-        target,
-        _write,
-        tmp=f"{state_dir}/.compact_tmp_{target_epoch}",
-        backup=f"{state_dir}/.compact_bak_{target_epoch}",
-    )
-    for e in sorted(epochs):
-        if e != target_epoch:
-            fs.delete(hpath(f"{state_dir}/batch_id={e}"), True)
+    replace_epoch(spark, state_dir, upto_batch - 1, merged)
+    drop_epochs(spark, state_dir, [e for e in epochs if e != upto_batch - 1])
     return rows_before, rows_after

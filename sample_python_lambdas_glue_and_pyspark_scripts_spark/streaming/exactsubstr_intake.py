@@ -50,6 +50,7 @@ from ..operators.dedup import (
 )
 from ..operators.text import WORD_REGEX
 from ..operators.util import ensure_parallelism
+from ..sources.promote import read_state
 from .incremental import run_incremental
 
 _ANCHOR_SCHEMA = "g1 BIGINT, g2 BIGINT, batch_id STRING"
@@ -60,18 +61,14 @@ def _read_anchors(
 ) -> DataFrame | None:
     """Distinct anchors from batches strictly before ``before_batch``;
     None when no state exists yet."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/anchors")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    anchors = read_state(spark, f"{work_dir}/anchors")
+    if anchors is None:
         return None
     # guard against a pre-120-bit state dir (single 'g BIGINT' column):
     # forcing the new schema onto it would read NULL g1/g2 and the
     # history semi join would silently match NOTHING — previously-seen
     # content would be re-admitted unrewritten. Fail loudly instead.
-    found = set(
-        spark.read.parquet(f"{work_dir}/anchors").columns
-    )
+    found = set(anchors.columns)
     if "g" in found and "g1" not in found:
         raise ValueError(
             "exactsubstr_intake: legacy 60-bit anchor state at "

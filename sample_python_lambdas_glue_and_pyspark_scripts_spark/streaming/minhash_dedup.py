@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import band_keys, minhash_signature
-from ..sources.promote import promote_swap
+from ..sources.promote import drop_epochs, list_epochs, read_state, replace_epoch
 from .incremental import run_incremental
 
 # claimed-table read schema: data columns + the batch_id partition column
@@ -147,17 +147,12 @@ def _read_claimed(
     Returns None only when no claimed table exists yet (first batch);
     any other read failure propagates — silently treating a broken
     state table as empty history would admit duplicates."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(claimed_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    claimed = read_state(spark, claimed_dir, _CLAIMED_SCHEMA)
+    if claimed is None:
         return None
-    return (
-        spark.read.schema(_CLAIMED_SCHEMA)
-        .parquet(claimed_dir)
-        .filter(F.col("batch_id").cast("bigint") < before_batch)
-        .select("band_id", "band_hash")
-    )
+    return claimed.filter(
+        F.col("batch_id").cast("bigint") < before_batch
+    ).select("band_id", "band_hash")
 
 
 def make_batch_fn(
@@ -225,51 +220,21 @@ def compact_claimed(
     ``batch_id=N`` directory, so compacting batches the checkpoint has
     not sealed would let a replay wipe merged history.
 
-    Promote protocol (Hadoop ``rename`` returns False on failure — every
-    step is checked, and the previous state is kept as a hidden ``.bak``
-    until the swap lands, per the versioning/compaction modules):
-    write merged to a temp outside the claimed dir -> back up the target
-    partition -> promote temp -> only then delete the merged-away batch
-    dirs and the backup. A crash mid-swap leaves the hidden ``.bak`` on
-    disk (invisible to Spark readers); the next ``compact_claimed`` call
-    auto-recovers it at entry — restoring it as the target partition if
-    the promote never landed, deleting it if it did — so recovery needs
-    no manual step, only re-running compaction before the stream
-    resumes.
+    Promote protocol: the merged partition replaces its target through
+    ``promote.replace_epoch`` (checked renames, the old partition kept
+    as ``claimed/.bak_<label>`` until the swap lands), and only then are
+    the merged-away batch dirs deleted. A crash mid-swap leaves the
+    hidden backup on disk; every read (``read_state``) and the next
+    compaction (``list_epochs``) restore it whatever ``upto_batch`` the
+    crashed run used, so recovery needs no manual step.
 
     Returns (rows_before, rows_after) — after = distinct buckets.
     """
     claimed_dir = f"{work_dir}/claimed"
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(claimed_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath(claimed_dir)):
+    epochs = [e for e in list_epochs(spark, claimed_dir) if e < upto_batch]
+    if not epochs:
         return 0, 0
-    # recover any orphaned backup from a crashed earlier compaction
-    # BEFORE reading history: if its target partition is missing (died
-    # between the two renames), the backup IS the state — restore it;
-    # if the target exists (died after promote), the backup is stale
-    for st in fs.listStatus(hpath(claimed_dir)):
-        name = st.getPath().getName()
-        if not name.startswith(".compact_bak_"):
-            continue
-        orphan_target = hpath(
-            f"{claimed_dir}/batch_id={name[len('.compact_bak_'):]}"
-        )
-        if not fs.exists(orphan_target):
-            if not fs.rename(st.getPath(), orphan_target):
-                raise IOError(
-                    f"compact_claimed: could not restore orphaned "
-                    f"backup {name}"
-                )
-        else:
-            fs.delete(st.getPath(), True)
-    hist = (
-        spark.read.schema(_CLAIMED_SCHEMA)
-        .parquet(claimed_dir)
-        .filter(F.col("batch_id").cast("bigint") < upto_batch)
-        .select("band_id", "band_hash")
-    )
+    hist = _read_claimed(spark, claimed_dir, upto_batch)
     before = hist.count()
     # size the output to ~ROWS_PER_COMPACT_FILE rows per file: the point
     # of compaction is collapsing thousands of tiny per-batch files, so
@@ -280,31 +245,9 @@ def compact_claimed(
     # shuffle moves only already-deduped rows
     n_files = max(1, -(-before // _ROWS_PER_COMPACT_FILE))
     merged = hist.distinct().repartition(n_files)
-
-    counted = {}
-
-    def _write(tmp_path: str) -> None:
-        merged.write.mode("overwrite").parquet(tmp_path)
-        counted["after"] = spark.read.parquet(tmp_path).count()
-
-    # checked-rename swap via the shared helper: old partition survives
-    # as backup until the compacted one is promoted (the orphan-backup
-    # prologue above handles crashed runs with OTHER upto_batch names)
-    promote_swap(
-        spark,
-        f"{claimed_dir}/batch_id={upto_batch - 1}",
-        _write,
-        tmp=f"{work_dir}/.claimed_compact_tmp",
-        backup=f"{claimed_dir}/.compact_bak_{upto_batch - 1}",
-    )
+    replace_epoch(spark, claimed_dir, upto_batch - 1, merged)
     # swap landed: drop the merged-away per-batch dirs
-    for st in fs.listStatus(hpath(claimed_dir)):
-        name = st.getPath().getName()
-        if name.startswith("batch_id="):
-            try:
-                bid = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if bid < upto_batch - 1:
-                fs.delete(st.getPath(), True)
-    return before, counted["after"]
+    drop_epochs(spark, claimed_dir, [e for e in epochs if e < upto_batch - 1])
+    return before, spark.read.parquet(
+        f"{claimed_dir}/batch_id={upto_batch - 1}"
+    ).count()

@@ -53,6 +53,7 @@ from ..operators.dedup import (
     _prefix_rows,
 )
 from ..operators.util import ensure_parallelism
+from ..sources.promote import read_state
 from .incremental import run_incremental
 
 _DFREQ_SCHEMA = "s BIGINT, sdf BIGINT"
@@ -86,12 +87,10 @@ def init_prefix_intake(
 
 
 def _read_dfreq(spark: SparkSession, work_dir: str) -> DataFrame:
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/dfreq")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    dfreq = read_state(spark, f"{work_dir}/dfreq", _DFREQ_SCHEMA)
+    if dfreq is None:
         return spark.createDataFrame([], _DFREQ_SCHEMA)
-    return spark.read.schema(_DFREQ_SCHEMA).parquet(f"{work_dir}/dfreq")
+    return dfreq
 
 
 def _read_state(
@@ -111,25 +110,15 @@ def _read_state(
     For any LATER batch both dirs already exist from the prior epoch,
     so a torn write there still propagates as a read error (correct:
     its claimed rows are genuinely required)."""
-    jvm = spark._jvm
-    pref_path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/prefix")
-    sh_path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/shingles")
-    fs = pref_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not (fs.exists(pref_path) and fs.exists(sh_path)):
+    pref = read_state(spark, f"{work_dir}/prefix", _PREFIX_SCHEMA)
+    sh = read_state(spark, f"{work_dir}/shingles", _SHINGLE_SCHEMA)
+    if pref is None or sh is None:
         return None
-    pref = (
-        spark.read.schema(_PREFIX_SCHEMA)
-        .parquet(f"{work_dir}/prefix")
-        .filter(F.col("batch_id").cast("bigint") < before_batch)
-        .select("doc_id", "L", "pos", "s")
+    before = F.col("batch_id").cast("bigint") < before_batch
+    return (
+        pref.filter(before).select("doc_id", "L", "pos", "s"),
+        sh.filter(before).select("doc_id", "shingles"),
     )
-    sh = (
-        spark.read.schema(_SHINGLE_SCHEMA)
-        .parquet(f"{work_dir}/shingles")
-        .filter(F.col("batch_id").cast("bigint") < before_batch)
-        .select("doc_id", "shingles")
-    )
-    return pref, sh
 
 
 def prefix_admit(

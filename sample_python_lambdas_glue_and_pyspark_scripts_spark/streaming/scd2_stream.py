@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.scd2 import scd2_apply
+from ..sources.promote import hadoop_fs
 
 _VER_RE = re.compile(r"^v(\d{8})$")
 
@@ -48,17 +49,9 @@ class Scd2DimStream:
     keep_versions: int = 3
 
     # --- filesystem helpers ---------------------------------------------
-    def _fs(self):
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI.create(self.path), hconf
-        )
-        return fs, jvm.org.apache.hadoop.fs.Path
-
     def _versions(self) -> list[int]:
         """Batch ids of COMPLETE versions (parquet _SUCCESS present)."""
-        fs, Path = self._fs()
+        fs, Path = hadoop_fs(self.spark, self.path)
         root = Path(self.path)
         if not fs.exists(root):
             return []
@@ -132,7 +125,7 @@ class Scd2DimStream:
         return True
 
     def _prune(self) -> None:
-        fs, Path = self._fs()
+        fs, Path = hadoop_fs(self.spark, self.path)
         vs = self._versions()
         for bid in vs[: max(0, len(vs) - self.keep_versions)]:
             try:

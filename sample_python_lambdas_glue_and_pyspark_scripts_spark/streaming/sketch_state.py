@@ -27,9 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sources.promote import promote_swap, recover_backup
-
 from ..operators.sketches import hll_estimate, hll_sketch
+from ..sources.promote import drop_epochs, list_epochs, read_state, replace_epoch
 from .incremental import run_incremental
 
 _REG_SCHEMA = "bucket bigint, rho int"
@@ -68,17 +67,10 @@ def streaming_hll(
 def read_hll_state(spark: SparkSession, work_dir: str) -> DataFrame:
     """The merged register table across every batch dir (cell-wise MAX).
     Empty-but-valid when no batch has committed yet."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/registers")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    state = read_state(spark, f"{work_dir}/registers", _REG_SCHEMA)
+    if state is None:
         return spark.createDataFrame([], _REG_SCHEMA)
-    return (
-        spark.read.schema(_REG_SCHEMA)
-        .parquet(f"{work_dir}/registers")
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
+    return state.groupBy("bucket").agg(F.max("rho").alias("rho"))
 
 
 def hll_state_estimate(spark: SparkSession, work_dir: str, p: int = 12) -> DataFrame:
@@ -91,57 +83,22 @@ def compact_registers(spark: SparkSession, work_dir: str) -> int:
     ``batch_id=compact`` dir so the state stays O(2^p) FILES as well as
     rows. Returns the number of batch dirs merged away.
 
-    Promote protocol (checked renames, backup kept until the swap
-    lands): write merged registers to a hidden tmp dir, back up the
-    previous compact dir if present, rename tmp into place, then drop
-    the merged-away per-batch dirs and the backup. MAX-merge idempotency
-    makes a crash at ANY point safe: the un-deleted batch dirs simply
-    re-merge next time.
+    Promote protocol: the merged registers replace ``batch_id=compact``
+    through ``promote.replace_epoch`` (checked renames, backup kept
+    until the swap lands), then the merged-away per-batch dirs are
+    dropped. ``list_epochs`` restores a crashed run's backup before
+    anything is read, and MAX-merge idempotency makes a crash at any
+    other point safe: the un-deleted batch dirs simply re-merge next
+    time.
     """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
     reg_root = f"{work_dir}/registers"
-    root = hpath(reg_root)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
+    epochs = list_epochs(spark, reg_root)  # batch_id=compact is not listed
+    if not epochs:
         return 0
-    # crash recovery BEFORE reading: a run that died between its two
-    # renames left batch_id=compact missing and the backup as the ONLY
-    # copy of previously merged-away registers — the old inline swap
-    # deleted the "stale" backup unconditionally and would have lost
-    # them here; the shared helper restores first
-    recover_backup(
-        spark,
-        f"{reg_root}/batch_id=compact",
-        backup=f"{work_dir}/.registers_compact_bak",
+    replace_epoch(
+        spark, reg_root, "compact", read_hll_state(spark, work_dir).coalesce(1)
     )
-    batch_dirs = [
-        st.getPath()
-        for st in fs.listStatus(root)
-        if st.isDirectory() and st.getPath().getName().startswith("batch_id=")
-    ]
-    if len(batch_dirs) <= 1:
-        return 0
-    merged = (
-        spark.read.schema(_REG_SCHEMA)
-        .parquet(reg_root)
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
-    promote_swap(
-        spark,
-        f"{reg_root}/batch_id=compact",
-        lambda tmp: merged.coalesce(1).write.mode("overwrite").parquet(tmp),
-        tmp=f"{work_dir}/.registers_compact_tmp",
-        backup=f"{work_dir}/.registers_compact_bak",
-    )
-    # swap landed: drop the merged-away per-batch dirs
-    removed = 0
-    for p_ in batch_dirs:
-        if p_.getName() != "batch_id=compact":
-            fs.delete(p_, True)
-            removed += 1
-    return removed
+    return drop_epochs(spark, reg_root, epochs)
 
 
 # --- count-min twin: streaming heavy-hitter frequencies -------------------
@@ -190,17 +147,10 @@ def streaming_cms(
 
 def read_cms_state(spark: SparkSession, work_dir: str) -> DataFrame:
     """Merged grid across every committed epoch (cell-wise SUM)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/cms")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    state = read_state(spark, f"{work_dir}/cms", _CMS_SCHEMA)
+    if state is None:
         return spark.createDataFrame([], _CMS_SCHEMA)
-    return (
-        spark.read.schema(_CMS_SCHEMA)
-        .parquet(f"{work_dir}/cms")
-        .groupBy("row", "slot")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return state.groupBy("row", "slot").agg(F.sum("cnt").alias("cnt"))
 
 
 # --- Bloom twin: streaming membership state --------------------------------
@@ -249,17 +199,10 @@ def streaming_bloom(
 def read_bloom_state(spark: SparkSession, work_dir: str) -> DataFrame:
     """Merged filter across every committed epoch (word-wise OR — the
     ``bloom_merge`` law). Empty-but-valid before the first commit."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/bloom")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    state = read_state(spark, f"{work_dir}/bloom", _BLOOM_SCHEMA)
+    if state is None:
         return spark.createDataFrame([], _BLOOM_SCHEMA)
-    return (
-        spark.read.schema(_BLOOM_SCHEMA)
-        .parquet(f"{work_dir}/bloom")
-        .groupBy("word_idx")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
+    return state.groupBy("word_idx").agg(F.bit_or("bits").alias("bits"))
 
 
 # --- bottom-k sample state -----------------------------------------------------
@@ -306,15 +249,11 @@ def read_bottomk_state(
     ``bottomk_merge`` law, so the read EQUALS a batch sketch over
     everything the stream has seen). Empty-but-valid before the first
     commit."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/bottomk")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    state = read_state(spark, f"{work_dir}/bottomk", _BK_SCHEMA)
+    if state is None:
         return spark.createDataFrame([], _BK_SCHEMA)
     return (
-        spark.read.schema(_BK_SCHEMA)
-        .parquet(f"{work_dir}/bottomk")
-        .select("h", "key")
+        state.select("h", "key")
         .distinct()
         .orderBy(F.col("h").asc())
         .limit(k)
@@ -371,15 +310,11 @@ def read_bottomk_values_state(
     the ``bottomk_value_merge`` law — the read EQUALS a batch sample
     over everything the stream has seen). Empty-but-valid before the
     first commit."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/bottomk_values")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    state = read_state(spark, f"{work_dir}/bottomk_values", _BKV_SCHEMA)
+    if state is None:
         return spark.createDataFrame([], _BKV_SCHEMA)
     return (
-        spark.read.schema(_BKV_SCHEMA)
-        .parquet(f"{work_dir}/bottomk_values")
-        .select("h", "key", "val")
+        state.select("h", "key", "val")
         .distinct()
         .orderBy(F.col("h").asc())
         .limit(k)
@@ -441,14 +376,10 @@ def read_fertility_state(spark: SparkSession, work_dir: str) -> DataFrame:
     Empty-but-valid before the first commit."""
     from ..operators.text import merge_fertility_reports
 
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/fertility")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    state = read_state(spark, f"{work_dir}/fertility", _FERT_SCHEMA)
+    if state is None:
         return spark.createDataFrame([], _FERT_SCHEMA)
-    return merge_fertility_reports(
-        spark.read.schema(_FERT_SCHEMA).parquet(f"{work_dir}/fertility")
-    )
+    return merge_fertility_reports(state)
 
 
 # --- streaming bounded-error quantiles (KLL state) ---------------------------
@@ -484,12 +415,9 @@ def read_kll_state(
     epochs exist). Empty-but-valid before the first commit."""
     from ..operators.kll import kll_merge_tagged
 
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/kll")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    state = read_state(spark, f"{work_dir}/kll")  # batch_id partition col
+    if state is None:
         return spark.createDataFrame([], _KLL_SCHEMA)
-    state = spark.read.parquet(f"{work_dir}/kll")  # batch_id partition col
     return kll_merge_tagged(state, k=k, tag_col="batch_id")
 
 
@@ -556,12 +484,10 @@ def streaming_votes(
 
 
 def _read_votes(spark: SparkSession, work_dir: str) -> DataFrame:
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{work_dir}/votes")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
+    state = read_state(spark, f"{work_dir}/votes", _VOTE_SCHEMA)
+    if state is None:
         return spark.createDataFrame([], _VOTE_SCHEMA)
-    return spark.read.schema(_VOTE_SCHEMA).parquet(f"{work_dir}/votes")
+    return state
 
 
 def read_consensus_state(spark: SparkSession, work_dir: str) -> DataFrame:
@@ -669,28 +595,15 @@ def streaming_kanon(
 
 
 def _read_kanon_parts(spark: SparkSession, work_dir: str) -> DataFrame | None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(work_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    # a compacted-away retractions/ root may exist but hold no epoch
-    # dirs — parquet schema inference fails on an empty root, so only
-    # roots with at least one batch_id child count as present
+    # a compacted-away retractions/ root holds no epoch: read as absent
     parts = [
-        p
-        for p in (f"{work_dir}/classes", f"{work_dir}/retractions")
-        if fs.exists(hpath(p))
-        and any(
-            st.getPath().getName().startswith("batch_id=")
-            for st in fs.listStatus(hpath(p))
-        )
+        read_state(spark, f"{work_dir}/{table}")
+        for table in ("classes", "retractions")
     ]
+    parts = [p.drop("batch_id") for p in parts if p is not None]
     if not parts:
         return None
-    out = None
-    for p in parts:
-        cur = spark.read.parquet(p).drop("batch_id")
-        out = cur if out is None else out.unionByName(cur)
-    return out
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
 
 def read_kanon_state(
@@ -795,27 +708,15 @@ def compact_kanon_state(
     re-merges them — sum of an already-folded zero-delta is safe
     because the folded partition replaced the dirs it covered).
     Returns ``(dirs_merged_away, rows_after)``."""
-    from .state_retraction import list_state_epochs
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(work_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    recover_backup(
-        spark,
-        f"{work_dir}/classes/batch_id={upto_batch - 1}",
-        backup=f"{work_dir}/.kanon_compact_bak",
-    )
-    class_epochs = [
-        e for e in list_state_epochs(spark, f"{work_dir}/classes")
-        if e < upto_batch
-    ]
-    retr_epochs = list_state_epochs(spark, f"{work_dir}/retractions")
+    classes, retractions = f"{work_dir}/classes", f"{work_dir}/retractions"
+    class_epochs = [e for e in list_epochs(spark, classes) if e < upto_batch]
+    retr_epochs = list_epochs(spark, retractions)
     if len(class_epochs) + len(retr_epochs) <= 1:
         return (0, 0)
     parts = None
     for d in (
-        [f"{work_dir}/classes/batch_id={e}" for e in class_epochs]
-        + [f"{work_dir}/retractions/batch_id={e}" for e in retr_epochs]
+        [f"{classes}/batch_id={e}" for e in class_epochs]
+        + [f"{retractions}/batch_id={e}" for e in retr_epochs]
     ):
         cur = spark.read.parquet(d)
         parts = cur if parts is None else parts.unionByName(cur)
@@ -830,21 +731,10 @@ def compact_kanon_state(
             "corruption away"
         )
     net = net.filter(F.col(_KANON_CNT) != 0)
-    promote_swap(
-        spark,
-        f"{work_dir}/classes/batch_id={upto_batch - 1}",
-        lambda tmp: net.coalesce(1).write.mode("overwrite").parquet(tmp),
-        tmp=f"{work_dir}/.kanon_compact_tmp",
-        backup=f"{work_dir}/.kanon_compact_bak",
-    )
-    removed = 0
-    for e in class_epochs:
-        if e != upto_batch - 1:
-            fs.delete(hpath(f"{work_dir}/classes/batch_id={e}"), True)
-            removed += 1
-    for e in retr_epochs:
-        fs.delete(hpath(f"{work_dir}/retractions/batch_id={e}"), True)
-        removed += 1
+    replace_epoch(spark, classes, upto_batch - 1, net.coalesce(1))
+    removed = drop_epochs(
+        spark, classes, [e for e in class_epochs if e != upto_batch - 1]
+    ) + drop_epochs(spark, retractions, retr_epochs)
     return (removed, net.count())
 
 

@@ -80,11 +80,12 @@ FUTURE doc identical to a retracted one is admitted as if the retracted
 doc had never existed (pinned by test).
 
 Operational contract (shared with ``compact_claimed``): run while the
-stream is STOPPED. Every directory replacement uses the checked-rename
-promote protocol (``sources/promote.py``) with dot-prefixed tmp/backup
-names so a crash mid-swap never loses an epoch and never leaves a
-directory Spark's partition discovery would misread; orphaned backups
-recover at entry on the next call.
+stream is STOPPED. Every epoch replacement goes through
+``promote.replace_epoch`` (dot-prefixed ``.tmp_<epoch>``/``.bak_<epoch>``
+names inside the table dir) so a crash mid-swap never loses an epoch and
+never leaves a directory Spark's partition discovery would misread;
+``promote.list_epochs`` restores orphaned backups at entry on the next
+call, and every state read restores them too.
 """
 
 from __future__ import annotations
@@ -93,10 +94,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import band_keys, minhash_signature
-from ..sources.promote import hadoop_fs, promote_swap, recover_backup
-
-_BAK_PREFIX = ".retract_bak_"
-_TMP_PREFIX = ".retract_tmp_"
+from ..sources.promote import list_epochs, replace_epoch
 
 
 def _ids_df(retract_ids: DataFrame, id_col: str) -> DataFrame:
@@ -108,53 +106,6 @@ def _ids_df(retract_ids: DataFrame, id_col: str) -> DataFrame:
     raise ValueError(
         f"state_retraction: retract_ids must have an {id_col!r} column "
         f"or be single-column, got {cols}"
-    )
-
-
-def list_state_epochs(spark: SparkSession, table_dir: str) -> list[int]:
-    """Epoch numbers present under ``table_dir`` (``batch_id=N`` dirs),
-    after recovering any orphaned mid-retraction backups (a leftover
-    ``.retract_bak_N`` with no live ``batch_id=N`` IS that epoch —
-    restore it before anything reads the table)."""
-    fs, hpath = hadoop_fs(spark, table_dir)
-    if not fs.exists(hpath(table_dir)):
-        return []
-    epochs = []
-    for st in fs.listStatus(hpath(table_dir)):
-        name = st.getPath().getName()
-        if name.startswith(_BAK_PREFIX):
-            recover_backup(
-                spark,
-                f"{table_dir}/batch_id={name[len(_BAK_PREFIX):]}",
-                f"{table_dir}/{name}",
-            )
-            name = f"batch_id={name[len(_BAK_PREFIX):]}"
-        if name.startswith("batch_id="):
-            try:
-                epochs.append(int(name[len("batch_id="):]))
-            except ValueError:
-                continue
-    return sorted(set(epochs))
-
-
-def _rewrite_epoch(
-    spark: SparkSession, table_dir: str, epoch: int, new_df: DataFrame
-) -> None:
-    """Replace ``table_dir/batch_id=epoch`` with ``new_df`` under the
-    checked-rename promote (dot-prefixed tmp/backup: partition
-    discovery must never see a half-state name like
-    ``batch_id=5__new``)."""
-    target = f"{table_dir}/batch_id={epoch}"
-
-    def _write(tmp_path: str) -> None:
-        new_df.write.mode("overwrite").parquet(tmp_path)
-
-    promote_swap(
-        spark,
-        target,
-        _write,
-        tmp=f"{table_dir}/{_TMP_PREFIX}{epoch}",
-        backup=f"{table_dir}/{_BAK_PREFIX}{epoch}",
     )
 
 
@@ -176,13 +127,13 @@ def retract_from_prefix_state(
     for table in ("prefix", "shingles", "kept"):
         table_dir = f"{work_dir}/{table}"
         n_removed = 0
-        for epoch in list_state_epochs(spark, table_dir):
+        for epoch in list_epochs(spark, table_dir):
             cur = spark.read.parquet(f"{table_dir}/batch_id={epoch}")
             hit = cur.join(ids, id_col, "left_semi").count()
             if hit == 0:
                 continue
             n_removed += hit
-            _rewrite_epoch(
+            replace_epoch(
                 spark, table_dir, epoch, cur.join(ids, id_col, "left_anti")
             )
         removed[table] = n_removed
@@ -218,8 +169,8 @@ def retract_from_minhash_state(
     ids = _ids_df(retract_ids, id_col).localCheckpoint(eager=True)
     kept_dir, claimed_dir = f"{work_dir}/kept", f"{work_dir}/claimed"
     removed = {"kept": 0, "claimed_rebuilt_epochs": 0}
-    claimed_epochs = sorted(list_state_epochs(spark, claimed_dir))
-    kept_epochs = sorted(list_state_epochs(spark, kept_dir))
+    claimed_epochs = sorted(list_epochs(spark, claimed_dir))
+    kept_epochs = sorted(list_epochs(spark, kept_dir))
 
     hit_epochs: set[int] = set()
     survivors: dict[int, DataFrame] = {}
@@ -234,7 +185,7 @@ def retract_from_minhash_state(
             eager=True
         )
         survivors[epoch] = surviving
-        _rewrite_epoch(spark, kept_dir, epoch, surviving)
+        replace_epoch(spark, kept_dir, epoch, surviving)
 
     prev = None
     for cl_epoch in claimed_epochs:
@@ -259,7 +210,7 @@ def retract_from_minhash_state(
             .select("band_id", "band_hash")
             .distinct()
         )
-        _rewrite_epoch(spark, claimed_dir, cl_epoch, buckets)
+        replace_epoch(spark, claimed_dir, cl_epoch, buckets)
         removed["claimed_rebuilt_epochs"] += 1
     return removed
 
@@ -282,13 +233,13 @@ def retract_from_ewma_state(
     ids = _ids_df(retract_keys, key_col).localCheckpoint(eager=True)
     table_dir = f"{work_dir}/ewma"
     n_removed = 0
-    for epoch in list_state_epochs(spark, table_dir):
+    for epoch in list_epochs(spark, table_dir):
         cur = spark.read.parquet(f"{table_dir}/batch_id={epoch}")
         hit = cur.join(ids, key_col, "left_semi").count()
         if hit == 0:
             continue
         n_removed += hit
-        _rewrite_epoch(
+        replace_epoch(
             spark, table_dir, epoch, cur.join(ids, key_col, "left_anti")
         )
     return {"ewma": n_removed}
@@ -333,7 +284,7 @@ def retract_from_votes_state(
     )
     table_dir = f"{work_dir}/votes"
     n_removed = 0
-    for epoch in list_state_epochs(spark, table_dir):
+    for epoch in list_epochs(spark, table_dir):
         cur = spark.read.parquet(f"{table_dir}/batch_id={epoch}")
         hit = cur.join(ids, key_col, "left_semi").count()
         if hit == 0:
@@ -342,7 +293,7 @@ def retract_from_votes_state(
         # keyed anti-joins move the join key to the FRONT of the
         # column order (the r9 note) — restore the state schema
         surv = cur.join(ids, key_col, "left_anti").select(*cur.columns)
-        _rewrite_epoch(spark, table_dir, epoch, surv)
+        replace_epoch(spark, table_dir, epoch, surv)
     return {"votes": n_removed}
 
 
@@ -383,20 +334,20 @@ def retract_from_exactsubstr_state(
     anchors_dir = f"{work_dir}/anchors"
     removed = {"kept": 0, "anchor_rebuilt_epochs": 0}
     hit_epochs: set[int] = set()
-    for epoch in list_state_epochs(spark, kept_dir):
+    for epoch in list_epochs(spark, kept_dir):
         cur = spark.read.parquet(f"{kept_dir}/batch_id={epoch}")
         hit = cur.join(ids, id_col, "left_semi").count()
         if hit == 0:
             continue
         removed["kept"] += hit
         hit_epochs.add(epoch)
-        _rewrite_epoch(
+        replace_epoch(
             spark, kept_dir, epoch, cur.join(ids, id_col, "left_anti")
         )
     source_of = (
         epoch_sources if callable(epoch_sources) else epoch_sources.get
     )
-    for epoch in list_state_epochs(spark, anchors_dir):
+    for epoch in list_epochs(spark, anchors_dir):
         if epoch not in hit_epochs:
             continue
         src = source_of(epoch)
@@ -415,7 +366,7 @@ def retract_from_exactsubstr_state(
             .select("g1", "g2")
             .distinct()
         )
-        _rewrite_epoch(spark, anchors_dir, epoch, anchors)
+        replace_epoch(spark, anchors_dir, epoch, anchors)
         removed["anchor_rebuilt_epochs"] += 1
     return removed
 
@@ -488,7 +439,7 @@ def retract_from_bottomk_values_state(
     )
     table_dir = f"{work_dir}/bottomk_values"
     removed = {"rows_removed": 0, "epochs_rebuilt": 0}
-    for epoch in list_state_epochs(spark, table_dir):
+    for epoch in list_epochs(spark, table_dir):
         cur = spark.read.parquet(f"{table_dir}/batch_id={epoch}")
         hit = cur.join(
             ids, F.col("key") == F.col("__rk"), "left_semi"
@@ -503,7 +454,7 @@ def retract_from_bottomk_values_state(
                 "left_anti",
             )
             fresh = bottomk_value_sample(src, key_col, val_col, k)
-            _rewrite_epoch(spark, table_dir, epoch, fresh)
+            replace_epoch(spark, table_dir, epoch, fresh)
             removed["epochs_rebuilt"] += 1
         else:
             # keyed anti-joins move the join key to the FRONT of the
@@ -511,7 +462,7 @@ def retract_from_bottomk_values_state(
             surv = cur.join(
                 ids, F.col("key") == F.col("__rk"), "left_anti"
             ).select(*cur.columns)
-            _rewrite_epoch(spark, table_dir, epoch, surv)
+            replace_epoch(spark, table_dir, epoch, surv)
     return removed
 
 
@@ -548,7 +499,7 @@ def retract_from_cc_state(
     edges_dir = f"{work_dir}/cc_edges"
     labels_dir = f"{work_dir}/cc_labels"
     out = {"edges_removed": 0, "label_epochs_rebuilt": 0}
-    epochs = list_state_epochs(spark, edges_dir)
+    epochs = list_epochs(spark, edges_dir)
     first_hit: int | None = None
     for epoch in epochs:
         cur = spark.read.schema(_CC_EDGES_SCHEMA).parquet(
@@ -560,7 +511,7 @@ def retract_from_cc_state(
             continue
         out["edges_removed"] += hits
         surv = cur.join(ids, hit_cond, "left_anti").select("a", "b")
-        _rewrite_epoch(spark, edges_dir, epoch, surv)
+        replace_epoch(spark, edges_dir, epoch, surv)
         if first_hit is None:
             first_hit = epoch
     if first_hit is None:
@@ -568,7 +519,7 @@ def retract_from_cc_state(
     # forward rebuild of the derived label snapshots from the earliest
     # hit epoch (earlier snapshots cannot contain the ids: labels only
     # ever come from edges)
-    prior = [e for e in list_state_epochs(spark, labels_dir) if e < first_hit]
+    prior = [e for e in list_epochs(spark, labels_dir) if e < first_hit]
     prev = _labels_at(spark, work_dir, max(prior)) if prior else _empty_labels(spark)
     for epoch in [e for e in epochs if e >= first_hit]:
         delta = spark.read.schema(_CC_EDGES_SCHEMA).parquet(
@@ -577,7 +528,7 @@ def retract_from_cc_state(
         labels = extend_components(prev, delta, src="a", dst="b").localCheckpoint(
             eager=True
         )
-        _rewrite_epoch(spark, labels_dir, epoch, labels)
+        replace_epoch(spark, labels_dir, epoch, labels)
         out["label_epochs_rebuilt"] += 1
         prev = labels
     return out
@@ -644,18 +595,12 @@ def retract_from_kanon_state(
             "never ingested, or the same deletion submitted twice); "
             "nothing was written"
         )
-    epochs = list_state_epochs(spark, f"{work_dir}/retractions")
+    epochs = list_epochs(spark, f"{work_dir}/retractions")
     nxt = (max(epochs) + 1) if epochs else 0
     neg = dec.select(
         *qi_cols, (-F.col("__dec")).cast("bigint").alias(_KANON_CNT)
     )
-    promote_swap(
-        spark,
-        f"{work_dir}/retractions/batch_id={nxt}",
-        lambda tmp: neg.write.mode("overwrite").parquet(tmp),
-        tmp=f"{work_dir}/{_TMP_PREFIX}kanon_{nxt}",
-        backup=f"{work_dir}/{_BAK_PREFIX}kanon_{nxt}",
-    )
+    replace_epoch(spark, f"{work_dir}/retractions", nxt, neg)
     stats = dec.agg(
         F.count(F.lit(1)).alias("k"), F.sum("__dec").alias("r")
     ).collect()[0]

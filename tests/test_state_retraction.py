@@ -9,6 +9,10 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from sample_python_lambdas_glue_and_pyspark_scripts_spark.sources.promote import (
+    epoch_paths,
+    list_epochs,
+)
 from sample_python_lambdas_glue_and_pyspark_scripts_spark.streaming import (
     state_retraction as SR,
 )
@@ -153,8 +157,9 @@ def test_orphaned_backup_recovers_at_entry(spark, workdir):
     kept = f"{workdir}/kept"
     # simulate a crash between the two promote renames: the epoch dir
     # was moved aside and the new content never landed
-    os.rename(f"{kept}/batch_id=0", f"{kept}/.retract_bak_0")
-    epochs = SR.list_state_epochs(spark, kept)
+    live, _, backup = epoch_paths(kept, 0)
+    os.rename(live, backup)
+    epochs = list_epochs(spark, kept)
     assert epochs == [0]
     assert os.path.isdir(f"{kept}/batch_id=0")
     rows = _read_all(spark, kept).collect()

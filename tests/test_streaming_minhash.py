@@ -14,6 +14,9 @@ from sample_python_lambdas_glue_and_pyspark_scripts_spark.operators.dedup import
     band_keys,
     minhash_signature,
 )
+from sample_python_lambdas_glue_and_pyspark_scripts_spark.sources.promote import (
+    epoch_paths,
+)
 from sample_python_lambdas_glue_and_pyspark_scripts_spark.streaming.minhash_dedup import (
     _read_claimed,
     lsh_admit,
@@ -190,7 +193,11 @@ def test_compact_claimed_preserves_history(spark, workdir):
         for p in glob.glob(f"{workdir}/claimed/batch_id=*")
     )
     assert dirs_after == ["batch_id=2"]
-    assert not os.path.exists(f"{workdir}/.claimed_compact_tmp")
+    # no crash debris (tmp or backup) left in the work dir or claimed/
+    assert [
+        n for d in (workdir, f"{workdir}/claimed")
+        for n in os.listdir(d) if n.startswith(".")
+    ] == []
 
     # resume the stream: a near-dup of batch-0 content must still be
     # dropped against the COMPACTED history; fresh content admitted
@@ -204,8 +211,8 @@ def test_compact_claimed_preserves_history(spark, workdir):
 
 def test_compact_claimed_recovers_orphaned_backup(spark, workdir):
     """A crash between the backup and promote renames leaves state only
-    in the hidden .compact_bak dir; the next compaction call must
-    restore it before reading history, so no claims are lost."""
+    in the hidden epoch backup; the next compaction call must restore
+    it before reading history, so no claims are lost."""
     from sample_python_lambdas_glue_and_pyspark_scripts_spark.streaming.minhash_dedup import (
         compact_claimed,
     )
@@ -217,10 +224,8 @@ def test_compact_claimed_recovers_orphaned_backup(spark, workdir):
 
     # simulate the crash window: batch_id=1 renamed to the backup,
     # promote never happened
-    os.rename(
-        f"{workdir}/claimed/batch_id=1",
-        f"{workdir}/claimed/.compact_bak_1",
-    )
+    live, _, backup = epoch_paths(f"{workdir}/claimed", 1)
+    os.rename(live, backup)
     before, after = compact_claimed(spark, workdir, upto_batch=2)
     assert after > 0
     # the merged table must include batch 1's claims: a near-dup of

@@ -1,6 +1,7 @@
 """VersionedCatalog runtime tests: the full ACTIVE/FUTURE lifecycle
 (SURVEY.md §7.1 M4; reference find_tables_to_load, load_job.py:304-368)."""
 
+import os
 import shutil
 import tempfile
 
@@ -107,3 +108,26 @@ def test_catalog_isolated_per_opco(spark, root):
     cat.load_opco(_df(spark, "019", "2024-01-05 00:00:00"), "019", is_partial=True)
     assert cat.table_is_empty(cat.table_name("020", "ACTIVE"))
     assert not cat.table_is_empty(cat.table_name("019", "ACTIVE"))
+
+
+def test_broken_catalog_raises_instead_of_reading_as_absent(spark, root):
+    """A catalog that exists but cannot be read must raise: reading it
+    as absent made the next init rewrite it with only the new opco, and
+    every other opco lost its ACTIVE/FUTURE pointers."""
+    cat = VersionedCatalog(spark, root)
+    assert cat._read_catalog() is None  # absent catalog: None, no error
+    cat.init_opco("001")
+    cat.init_opco("002")
+    parts = [n for n in os.listdir(cat.catalog_path) if n.startswith("part-")]
+    for name in parts:
+        with open(os.path.join(cat.catalog_path, name), "wb") as fh:
+            fh.write(b"not a parquet file")
+        crc = os.path.join(cat.catalog_path, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    with pytest.raises(ETLLoadError, match="unreadable"):
+        cat.init_opco_if_absent("003")
+    # nothing was rewritten: the broken part files are still the catalog
+    assert sorted(
+        n for n in os.listdir(cat.catalog_path) if n.startswith("part-")
+    ) == sorted(parts)
