@@ -185,8 +185,9 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def warmup(spark) -> None:
-    """Untimed: one full scan of every input table + one tiny query.
+def warmup(spark, sf_dir: str) -> None:
+    """Untimed: one full scan of every input table in ``sf_dir`` + one
+    tiny query.
     Initializes the JVM, codegen, Arrow/Python workers, parquet footer
     cache, and the OS page cache for the data files. Each step is
     failure-isolated like the timed loop: a bad table or a broken warm
@@ -198,11 +199,11 @@ def warmup(spark) -> None:
     ensure_runtime_confs(spark)
     qs = entrymod.queries()
     steps = [
-        (t, lambda t=t: force(spark.read.parquet(f"{SF_DIR}/{t}.parquet")))
+        (t, lambda t=t: force(spark.read.parquet(f"{sf_dir}/{t}.parquet")))
         for t in TESTDATA_TABLES
-        if os.path.exists(f"{SF_DIR}/{t}.parquet")
+        if os.path.exists(f"{sf_dir}/{t}.parquet")
     ] + [
-        ("warm:tpch_q1", lambda: force(qs["tpch_q1"](spark, SF_DIR))),
+        ("warm:tpch_q1", lambda: force(qs["tpch_q1"](spark, sf_dir))),
         # spin the Arrow/Python daemon pool: the first mapInPandas query
         # otherwise pays worker startup (~3x on small stages — CLAUDE.md)
         (
@@ -245,7 +246,7 @@ def main() -> None:
         _MIRRORS = {"dedup_jaccard", "corpus_admitted", "lsh_banding_report"}
         names = [n for n in names if n not in _MIRRORS]
 
-    warmup(spark)
+    warmup(spark, SF_DIR)
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}

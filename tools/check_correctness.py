@@ -12,7 +12,9 @@ one line per query + a summary.
 
 ``--contraction off`` runs every driver-contraction family's distributed
 loop (``operators/contraction.py`` ``forced_off``) — the oracle arm for
-the path those operators take above their bounds.
+the path those operators take above their bounds. With no query names it
+runs CONTRACTION_QUERIES: no other query reaches a probe, so their off
+arm would repeat the default.
 """
 
 from __future__ import annotations
@@ -42,6 +44,16 @@ from sample_python_lambdas_glue_and_pyspark_scripts_spark.sources.readers import
 )
 
 SF_DIR = resolve_sf_dir(default="/root/testdata/sf0.01")
+
+# Every query that reaches an operators/contraction.py probe at sf0.01.
+CONTRACTION_QUERIES = (
+    "dedup_clusters", "dedup_clusters_star", "dedup_rate_report", "dedup_clusters_extended",
+    "dedup_canonical_docs", "nation_communities", "nation_pagerank", "nation_trustrank",
+    "community_modularity", "community_modularity_weighted", "community_conductance",
+    "ann_ivf_trained_topk", "ann_ivfpq_residual_topk", "ann_ivfpq_topk", "ann_pq_topk",
+    "kmeans_clusters", "pq_codebooks", "pq_codes", "prototype_pruned_docs", "semantic_dedup",
+    "semantic_dedup_sweep", "langid_classifier_scores", "quality_calibration_report",
+)
 
 
 def norm(v):
@@ -192,9 +204,10 @@ def main(argv=None):
     )
     args = ap.parse_args(argv)
     print(f"driver contraction: {args.contraction}")
-    arm = forced_off() if args.contraction == "off" else contextlib.nullcontext()
-    with arm:
-        return check(set(args.queries))
+    off = args.contraction == "off"
+    only = set(args.queries or (CONTRACTION_QUERIES if off else ()))
+    with forced_off() if off else contextlib.nullcontext():
+        return check(only)
 
 
 def check(only):

@@ -17,10 +17,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from bench import BENCH_QUERIES
+from bench import BENCH_QUERIES, SF_DIR  # the dir bench.py times
 from sample_python_lambdas_glue_and_pyspark_scripts_spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def analyze(df, spark) -> dict:
@@ -78,8 +76,13 @@ def main() -> None:
     names = [n for n in BENCH_QUERIES if n in qs]
     names += sorted(n for n in qs if n not in names)
     for name in names:
-        df = qs[name](spark, SF_DIR)
-        a = analyze(df, spark)
+        try:
+            a = analyze(qs[name](spark, SF_DIR), spark)
+        except Exception as exc:  # noqa: BLE001 — isolate per query
+            err = f"{type(exc).__name__}: {exc}".splitlines()[0][:200]
+            print(f"PLAN-ERROR {name}: {err}", file=sys.stderr)
+            lines.append(f"| {name} | error: {err.replace('|', '/')} | | | | | |")
+            continue
         lines.append(
             f"| {name} | {a['broadcast_joins']} | {a['sortmerge_joins']} | "
             f"{a['exchanges']} | {a['scans']} | {a['pushed_filters']} | "
